@@ -74,7 +74,8 @@ object Bench {
   private def heapBean = java.lang.management.ManagementFactory
     .getMemoryMXBean.getHeapMemoryUsage
   /** JVM -Xmx-style size string to bytes; ANY malformed input
-    * (empty string, "8 gb", garbage) falls back to the 8g default —
+    * (empty string, "8 gb", garbage, a size ≤ 0) falls back to the 8g
+    * default — build.sbt's driverMemBytes uses the same grammar —
     * this runs on the first line of the graded main, where an
     * exported-but-empty SPARK_DRIVER_MEM must never be a crash. A
     * NON-empty value that fails the parse gets a one-line warning
@@ -83,19 +84,19 @@ object Bench {
   private[graft] def parseMemBytes(raw: String): Long =
     try {
       val s = raw.trim.toLowerCase
-      val mult = s.last match {
-        case 'k' => 1L << 10
-        case 'm' => 1L << 20
-        case 'g' => 1L << 30
-        case 't' => 1L << 40
-        case _ => 1L
+      val bytes = s.last match {
+        case 'k' => s.init.trim.toLong << 10
+        case 'm' => s.init.trim.toLong << 20
+        case 'g' => s.init.trim.toLong << 30
+        case 't' => s.init.trim.toLong << 40
+        case _ => s.toLong
       }
-      val digits = if (s.last.isDigit) s else s.dropRight(1)
-      digits.toLong * mult
+      require(bytes > 0)
+      bytes
     } catch {
       case _: Throwable =>
         if (raw.trim.nonEmpty)
-          println(s"WARN: SPARK_DRIVER_MEM '$raw' unparseable - using the 8g default")
+          println(s"WARN: SPARK_DRIVER_MEM '$raw' unparseable or not positive - using the 8g default")
         8L << 30
     }
   /** Target heap: the driver contract's SPARK_DRIVER_MEM (default 8g,
@@ -546,34 +547,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to every core (the driver contract is local[32]); the env
     // var still pins an explicit width for controlled runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep managed-table writes (join_bucketed) off the launch CWD,
-      // and per-process so concurrent JVMs can't race the table builds
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-    // Shuffle/spill scratch on the fastest local storage available —
-    // see [[Scratch]] (guide §6): the shared-virtual-disk default
-    // charged 11–14 s of shuffle-write I/O wait to kilobyte exchanges
-    // under co-tenant disk load. Spark creates and deletes per-app
-    // subdirectories; nothing persists across runs.
-    Scratch.fastRoot.foreach(d => builder.config("spark.local.dir", d))
-    // dev A/B hook (unset on the driver): AQE partition coalescing with
-    // parallelism-first OFF — the Spark-documented busy-cluster setting.
-    // At fixture scale it collapses near-empty post-shuffle tasks; at
-    // production scale the advisory size governs and the flag is moot.
-    // Results are partitioning-independent by the Det ground rule, so
-    // this is a pure physical A/B.
-    if (sys.env.contains("SPARK_GRAFT_COALESCE")) {
-      builder.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    }
-    val spark = builder.getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.builder().master(s"local[$cpus]").shuffle(cpus)
+      .build()
     // re-exec child-progress proof: touch the parent's sentinel path
     // the moment the session exists — past VM init (heap committed)
     // and BEFORE any artifact output, the exact boundary the parent's
@@ -669,7 +645,7 @@ object Bench {
       // warm the PQ chain on 64 deterministic toy vectors: sim_pq's
       // r8 driver regression (1.61 → 2.35 s, plan unchanged) probed as
       // pure first-run JIT — 5.23 s cold vs 1.66 s warm in one JVM
-      // (PqPhaseProbe); production operator chain, toy data
+      // (docs/TODO_r9.md §4); production operator chain, toy data
       // per-warm guards (the warmThunks contract below): one warm
       // failing must not skip the other warms or the prelude-final
       // clearCache — without this, a PQ-chain regression would
@@ -707,7 +683,7 @@ object Bench {
       // round shape (graph_shortest_path), the 3-iteration pagerank
       // round shape, and the six-stage minhash chain — each measured
       // at ~2x its steady-state cost in-bench from first-run JIT
-      // (MinhashProbe / PqPhaseProbe pattern). Their tiny persisted
+      // (docs/TODO_r9.md §4–5). Their tiny persisted
       // inputs are dropped by the clearCache below, BEFORE any
       // measured query runs.
       locally {

@@ -311,15 +311,9 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val skewMode = sys.env.contains("SPARK_GRAFT_REHEARSE_SKEW")
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.builder().master(s"local[$cpus]").shuffle(cpus)
+      .build()
     spark.sparkContext.setLogLevel("ERROR")
     // warm codegen/ICU once so x1 isn't charged JVM setup
     spark.read.parquet(s"$baseDir/documents.parquet").limit(200)

@@ -2,12 +2,10 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic main: count LIVE parquet scans per source file in each
   * qid's executed plans — the suite-wide version of the sketch_tow
@@ -106,82 +104,21 @@ object ScanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-    // scale-path mode: disable broadcast joins so every join takes the
-    // shape it would with a non-broadcastable (100 TB) side, and the
-    // audit reports the scan counts THAT plan pays
-    if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // per-execution scan multisets, drained between qids; listener
-    // delivery is async, so the drain polls until stable (the
-    // ActionAudit protocol)
-    val executions = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val exchDupes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        executions.add(liveScans(qe.executedPlan))
-        liveExchanges(qe.executedPlan)
-          .groupBy(_.canonicalized.semanticHash()).values
-          .filter(g => g.size > 1 && g.sliding(2).forall {
-            case Seq(x, y) => x.sameResult(y); case _ => true
-          })
-          .foreach(g => exchDupes.add(
-            s"${g.size}x ${g.head.outputPartitioning}"))
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drain(): Seq[Seq[String]] = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 3_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(30)
-        val now = executions.size()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      val out = mutable.Buffer[Seq[String]]()
-      while (!executions.isEmpty) out += executions.poll()
-      out.toSeq
-    }
-
-    // dev-only prefix filter (uniform across the four audit mains):
-    // re-check just the qids a fix touched without a full sweep
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      // stream_live_* execute via IncrementalExecution, which never
-      // reaches QueryExecutionListener — running them here would pay
-      // seconds of streaming machinery per sweep to audit only the
-      // trivial post-sink batch fragment, recording HOLLOW coverage.
-      // Their scale story is the batch twins' (same shapes) plus the
-      // StreamingMlSpec equality proofs; excluded LOUDLY:
-      .filterNot { case (n, _) =>
-        val skip = n.startsWith("stream_live")
-        if (skip) println(s"SKIP $n (streaming IncrementalExecution is invisible to QueryExecutionListener)")
-        skip
-      }
-    def family(name: String): String = name.takeWhile(_ != '_')
+    // SPARK_GRAFT_NO_BCAST: scale-path mode, see Audit.session
+    val spark = Audit.session()
+    // per execution: the live scans, and the missed exchange reuses
+    val tap = new Audit.PlanTap(spark, p =>
+      (liveScans(p), liveExchanges(p)
+        .groupBy(_.canonicalized.semanticHash()).values
+        .filter(g => g.size > 1 && g.sliding(2).forall {
+          case Seq(x, y) => x.sameResult(y); case _ => true
+        })
+        .map(g => s"${g.size}x ${g.head.outputPartitioning}")))
     var flagged = 0
     var mainFlagged = 0
     var exchFlagged = 0
-    ordered.zipWithIndex.foreach { case ((name, fn), i) =>
-      drain()
-      try fn(spark, sfDir).collect()
-      catch { case t: Throwable => println(s"ERR $name ${t.getClass.getSimpleName}") }
-      val execs = drain()
+    Audit.sweep(spark, tap, Audit.queries(), sfDir) { (name, records) =>
+      val execs = records.map(_._1)
       // worst single execution per file (the redundant-read signal) and
       // the total across executions (loop context)
       // group by the slice key (tag stripped); report the tag multiset
@@ -206,14 +143,10 @@ object ScanAudit {
           println(f"$w%3d in one exec (${total(f)}%3d over ${execs.size}%2d execs, tags=${tags(f).sorted.mkString("/")})  $name%-24s $f")
         }
       }
-      while (!exchDupes.isEmpty) {
+      records.flatMap(_._2).foreach { d =>
         exchFlagged += 1
-        println(s"EXCH missed reuse  $name  ${exchDupes.poll()}")
+        println(s"EXCH missed reuse  $name  $d")
       }
-      val lastOfFamily = i + 1 >= ordered.size ||
-        family(ordered(i + 1)._1) != family(name)
-      if (lastOfFamily)
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
     }
     println(s"flagged (identical slice scanned >1x in a single execution): $flagged")
     println(s"of which >1 main-pipeline reads (the real scale findings): $mainFlagged")

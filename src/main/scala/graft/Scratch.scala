@@ -6,8 +6,9 @@ package graft
   *
   * Guide §6: local scratch belongs on the fastest local storage the
   * host offers. The default java.io.tmpdir here sits on the host's
-  * SHARED virtual disk, and r13 NodeProbe runs measured 11–14 s of
-  * task-time in shuffleWriteTime for KILOBYTE-sized exchanges while
+  * SHARED virtual disk, and r13 plan-metric dumps measured 11–14 s of
+  * task-time in shuffleWriteTime (OPTIMIZATION_r13.md §3) for
+  * KILOBYTE-sized exchanges while
   * co-tenants hammered that disk — pure I/O wait charged to whichever
   * qid was running. A RAM-backed tmpfs removes that channel entirely;
   * on a production cluster the same decision is "put spark.local.dir

@@ -1,14 +1,10 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic main: find SERIAL stages — plan points where the whole
   * relation funnels through ONE partition — and measure whether the
@@ -93,75 +89,18 @@ object SerialStageAudit {
   def main(args: Array[String]): Unit = {
     val dir1 = args.headOption.getOrElse("/tmp/graft_scale/x1")
     val dirK = args.drop(1).headOption.getOrElse("/tmp/graft_scale/x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-    // scale-path mode (the ScanAudit convention): with broadcast joins
-    // disabled every join takes its non-broadcastable shape, exposing
-    // serial stages a fixture-scale broadcast choice would hide
-    if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val perExec = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        perExec.add(serialRows(qe.executedPlan))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drainMax(): (String, Long) = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 3_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(30)
-        val now = perExec.size()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      var mx: (String, Long) = ("", 0L)
-      while (!perExec.isEmpty)
-        perExec.poll().foreach { case (c, r) => if (r > mx._2) mx = (c, r) }
-      mx
-    }
-
-    // dev-only prefix filter (the Bench contract; unset on full runs):
-    // re-check just the qids a fix touched without a two-sweep full run
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      // stream_live_* execute via IncrementalExecution, which never
-      // reaches QueryExecutionListener — running them here would pay
-      // seconds of streaming machinery per sweep to audit only the
-      // trivial post-sink batch fragment, recording HOLLOW coverage.
-      // Their scale story is the batch twins' (same shapes) plus the
-      // StreamingMlSpec equality proofs; excluded LOUDLY:
-      .filterNot { case (n, _) =>
-        val skip = n.startsWith("stream_live")
-        if (skip) println(s"SKIP $n (streaming IncrementalExecution is invisible to QueryExecutionListener)")
-        skip
-      }
-    def family(name: String): String = name.takeWhile(_ != '_')
+    // scale-path mode (SPARK_GRAFT_NO_BCAST, see Audit.session): with
+    // broadcast joins disabled every join takes its non-broadcastable
+    // shape, exposing serial stages a fixture-scale broadcast choice
+    // would hide
+    val spark = Audit.session()
+    val tap = new Audit.PlanTap(spark, serialRows(_))
+    val ordered = Audit.queries()
     def sweep(dir: String): Map[String, (String, Long)] =
-      ordered.zipWithIndex.map { case ((name, fn), i) =>
-        drainMax()
-        try fn(spark, dir).collect()
-        catch { case t: Throwable => println(s"ERR $name $dir ${t.getClass.getSimpleName}") }
-        val mx = drainMax()
-        val lastOfFamily = i + 1 >= ordered.size ||
-          family(ordered(i + 1)._1) != family(name)
-        if (lastOfFamily)
-          try spark.catalog.clearCache() catch { case _: Throwable => () }
-        name -> mx
-      }.toMap
+      Audit.sweep(spark, tap, ordered, dir)((_, execs) =>
+        execs.flatten.foldLeft(("", 0L)) { case (mx, (c, r)) =>
+          if (r > mx._2) (c, r) else mx
+        }).toMap
 
     val at1 = sweep(dir1)
     val atK = sweep(dirK)

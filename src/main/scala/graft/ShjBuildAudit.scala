@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic main (r14, VERDICT r13 ask #7): empirical §5
   * spill-headroom check for the hint-forced ShuffledHashJoins
@@ -50,45 +48,20 @@ object ShjBuildAudit {
     val k = args.lift(2).map(_.toInt).getOrElse(10)
     val qids = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
       .getOrElse(Seq("graph_pagerank", "join_skew_salt"))
-    val w1 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${math.max(4, Runtime.getRuntime.availableProcessors())}]")
-      .config("spark.sql.shuffle.partitions", w1)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val perExec = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Long, Long)]]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        perExec.add(shjBuilds(qe.executedPlan))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drain(): Seq[(Long, Long)] = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 3_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(30)
-        val now = perExec.size()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      var all = Seq.empty[(Long, Long)]
-      while (!perExec.isEmpty) all ++= perExec.poll()
-      all
-    }
+    // shuffle width from SPARK_GRAFT_CPUS (default 8, scaled k× for the
+    // k× corpus); the master keeps every core
+    val w1 = GraftSession.cpus(fallback = 8)
+    val spark = Audit.session(shuffle = w1, cores = GraftSession.cpus(raw = None))
+    val tap = new Audit.PlanTap(spark, shjBuilds)
 
     /** max build bytes/partition over every SHJ the qid executed. */
     def sweep(dir: String, width: Int): Map[String, Long] = {
       spark.conf.set("spark.sql.shuffle.partitions", width)
       qids.map { q =>
-        drain()
+        tap.drain()
         try Registry.byId(q).fn(spark, dir).collect()
         catch { case t: Throwable => println(s"ERR $q $dir ${t.getClass.getSimpleName}") }
-        val builds = drain()
+        val builds = tap.drain().flatten
         spark.catalog.clearCache()
         val perPart = builds.map(_._1).filter(_ >= 0).map(_ / width)
         println(s"  $q @ $dir width=$width shj_builds=${builds.size} " +

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Diagnostic main: measure how each qid's TOTAL SHUFFLE VOLUME grows
   * with the corpus — the fourth empirical-scale audit (ScanAudit:
@@ -79,69 +77,11 @@ object ShuffleGrowthAudit {
   def main(args: Array[String]): Unit = {
     val dir1 = args.headOption.getOrElse("/tmp/graft_scale/x1")
     val dirK = args.drop(1).headOption.getOrElse("/tmp/graft_scale/x10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-    if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val perExec = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        perExec.add(shuffleRows(qe.executedPlan))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drainSum(): Long = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 3_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(30)
-        val now = perExec.size()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      var s = 0L
-      while (!perExec.isEmpty) s += perExec.poll()
-      s
-    }
-
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      // stream_live_* execute via IncrementalExecution, which never
-      // reaches QueryExecutionListener — running them here would pay
-      // seconds of streaming machinery per sweep to audit only the
-      // trivial post-sink batch fragment, recording HOLLOW coverage.
-      // Their scale story is the batch twins' (same shapes) plus the
-      // StreamingMlSpec equality proofs; excluded LOUDLY:
-      .filterNot { case (n, _) =>
-        val skip = n.startsWith("stream_live")
-        if (skip) println(s"SKIP $n (streaming IncrementalExecution is invisible to QueryExecutionListener)")
-        skip
-      }
-    def family(name: String): String = name.takeWhile(_ != '_')
+    val spark = Audit.session()
+    val tap = new Audit.PlanTap(spark, shuffleRows)
+    val ordered = Audit.queries()
     def sweep(dir: String): Map[String, Long] =
-      ordered.zipWithIndex.map { case ((name, fn), i) =>
-        drainSum()
-        try fn(spark, dir).collect()
-        catch { case t: Throwable => println(s"ERR $name $dir ${t.getClass.getSimpleName}") }
-        val s = drainSum()
-        val lastOfFamily = i + 1 >= ordered.size ||
-          family(ordered(i + 1)._1) != family(name)
-        if (lastOfFamily)
-          try spark.catalog.clearCache() catch { case _: Throwable => () }
-        name -> s
-      }.toMap
+      Audit.sweep(spark, tap, ordered, dir)((_, execs) => execs.sum).toMap
 
     // ratio table + SUPERLINEAR verdicts for one family's 1x/10x pair
     // (shared by both families so threshold/format edits stay single-site)

@@ -97,7 +97,7 @@ object MlBridges {
     * at 100 TB nobody fits a clusterer on the full corpus; IVF/PQ
     * codebooks train on a bounded sample). This replaced an MLlib
     * KMeans fit that cost more than the whole candidate join
-    * (IvfPhaseProbe: fit 1.4–3.5 s of sim_ann_ivf's 4.5 s driver
+    * (docs/TODO_r7.md §2: fit 1.4–3.5 s of sim_ann_ivf's 4.5 s driver
     * seconds — per-job overhead of ~14 scheduler rounds on a corpus
     * whose quantizer only GATES candidates; the declared rows are the
     * exact twin and the cells just need recall ≥ 0.5 at nprobe 3/8).
@@ -143,7 +143,7 @@ object MlBridges {
     // ONE Lloyd refinement of the sampled anchors (random anchors carve
     // uneven Voronoi cells on uniform data; one mean step rebalances —
     // measured +12/+6/−1 recall hits at sf0.001/0.01/0.1, lifting the
-    // thinnest margin from 8 to 20 hits, IvfPhaseProbe). The per-cell
+    // thinnest margin from 8 to 20 hits, docs/TODO_r7.md §2). The per-cell
     // mean is
     // computed over e6-INTEGER coordinates: a bigint sum is exactly
     // associative, so the refined centroids — unlike a float-summing
@@ -195,9 +195,6 @@ object MlBridges {
         round(graft.functions.VectorExprs.dot(col("qv"), col("c.v")) /
           (col("qn") * col("c.n")), 6).as("cos"))
   }
-
-  /** Dev/probe hook: drop the memo so a fresh build can be timed. */
-  private[graft] def clearIvfMemo(): Unit = ivfMemo.clear()
 
   private val ivfMemo = scala.collection.concurrent.TrieMap
     .empty[(String, String, Int, Option[Int]), DataFrame]

@@ -201,7 +201,7 @@ object GraphOps {
     // bit-identical integer arithmetic (`div` per src, summed per
     // dst), one fewer full edge pass, half the cache width, and
     // |nodes| divisions per round instead of |edges|. Measured (r10
-    // CpuProbe, fresh JVM incl. the co-purchase build, sf0.1 2.4M
+    // docs/TODO_r10.md §2, fresh JVM incl. the co-purchase build, sf0.1 2.4M
     // directed edges): per-iteration stage CPU 14–18 → 7–11 s; probe
     // task_cpu 115–147 → ~110 s, where the residual is the family's
     // shared co-purchase build (~37 s) plus this loop's own edge
@@ -233,7 +233,7 @@ object GraphOps {
       lit(1000000L).as("rank_e6"))
     // Join-strategy note (r13, supersedes the r10 "AQE's pick is left
     // alone" A/B): the r10 A/B compared totals on a weather-dominated
-    // host and read "within noise"; the r13 NodeProbe plan dump shows
+    // host and read "within noise"; the r13 plan-metric dump shows
     // what the totals hid — AQE planned e ⋈ share as a SortMergeJoin,
     // fully sorting the 2.39M-row edge cache EVERY round (the share
     // side's estimate derives from the edge-sized relation, so the
@@ -256,8 +256,8 @@ object GraphOps {
     // The share build (deg ⋈ ranks) gets the SAME hint (r14, VERDICT
     // r13 ask #3): statically it planned as a SortMergeJoin and only
     // AQE's runtime broadcast conversion saved it at fixture scale
-    // (NodeProbe-verified: BroadcastHashJoin, 20k rows/round) — a
-    // threshold-dependent rescue that disappears exactly when it
+    // (executed-plan metrics, commit c2bc6c4: BroadcastHashJoin, 20k
+    // rows/round) — a threshold-dependent rescue that disappears exactly when it
     // matters, since BOTH sides are |nodes|-proportional (the same
     // growth class BroadcastAudit flagged on the share broadcast).
     // SHUFFLE_HASH on ranks pins the threshold-independent shape:
@@ -408,8 +408,8 @@ object GraphOps {
     * Catalyst's budget. Checkpointing on even rounds keeps the
     * doubling bounded at one level while halving the loop's action
     * count (8 -> 5 job-bearing actions for graph_shortest_path,
-    * measured by ActionAudit — the contended-driver axis, same
-    * motivation as the r8 fused probes). Blocks of the previous
+    * measured in the r9 action census, docs/TODO_r9.md §8 — the
+    * contended-driver axis, same motivation as the r8 fused probes). Blocks of the previous
     * checkpoint are freed only after the next eager checkpoint has
     * materialized (the lazy in-between round still reads them until
     * then). Split out of graph_shortest_path (r9) so the bench

@@ -61,7 +61,7 @@ object LlmPipeline {
       // concat_ws(' ', slice(w, i, 3)) — the slice allocates a 3-slot
       // array and concat_ws walks it per shingle; three direct O(1)
       // element_at reads into one 5-arg concat measured 2.5 vs 3.7
-      // warm CPU-s for the full sf0.1 explode (DedupCpuProbe, −32%).
+      // warm CPU-s for the full sf0.1 explode (−32%, commit 19da1fc).
       // Row-identical by case analysis: for size(w) >= 3 both forms
       // join w(i..i+2) with single spaces (concat_ws skips only
       // NULLs, which split() never yields, so empty tokens from
@@ -397,7 +397,7 @@ object LlmPipeline {
     * df-capped baskets (shingle, docs) — split out (the simPqOn
     * pattern) so the bench prelude can warm the chain's six codegen
     * stages (4-md5 slice, 16-way min agg, band agg, band self-join,
-    * sizes, verification joins) on toy postings: MinhashProbe measured
+    * sizes, verification joins) on toy postings: the r9 stage probe measured
     * the in-bench figure at ~2× the steady-state stage sum, the rest
     * being first-run JIT. */
   private[graft] def dedupMinhashOn(sh: DataFrame, baskets: DataFrame): DataFrame = {
@@ -1497,7 +1497,7 @@ object LlmPipeline {
     * zip_with/aggregate distance HOF, packed-long hash argmin, ADC top-k) on
     * toy vectors: the r8→r9 probe measured the registered query at
     * 5.23 s cold vs 1.66 s warm in one JVM — the driver delta was
-    * first-run JIT, not the plan (PqPhaseProbe). */
+    * first-run JIT, not the plan (docs/TODO_r9.md §4). */
   private[graft] def simPqOn(emb: DataFrame): DataFrame = {
     val nQ = 20
     val ve = emb
@@ -2032,12 +2032,12 @@ object LlmPipeline {
     // scales with n so bucket size stays ~12 constant: a fixed fan-out
     // makes init volume O(n), where a fixed bucket count would make it
     // O(n²/B) — the same quadratic class the simhash 8-bit bands had.
-    // Size 12 beat 16 on BOTH axes in the round-7 ladder (KnnProbe,
+    // Size 12 beat 16 on BOTH axes in the round-7 ladder (docs/TODO_r7.md §1,
     // rounds=4): recall 0.91/0.93/0.73 vs 0.90/0.93/0.71 at 27% less
     // init volume — more, smaller buckets mix the expander better per
     // scored pair. 8 and 10 were probed too (0.67/0.68 at sf0.1) —
     // the knee is at 12.
-    // Bucketing COUNT re-laddered in r14 (VERDICT r13 ask #4, KnnProbe
+    // Bucketing COUNT re-laddered in r14 (VERDICT r13 ask #4, commit 19da1fc,
     // at rounds=4 over sf0.001/0.01/0.1 + the x1/x10 rehearsal
     // corpora): B=6 recalls 0.91/0.95/0.75 (x10 0.94) — at or above
     // B=8's 0.91/0.93/0.73 (x10 0.98) everywhere native — while B=5
@@ -2170,7 +2170,7 @@ object LlmPipeline {
     * keep the top-b by exact cosine to each query. Returns (qid, cid,
     * cos) — the beam's final top-b per query. LlmPipelineSpec asserts
     * recall ≥ 0.85 of the exact top-5 (k=12/rounds=4/beam=48/hops=8
-    * measured 1.00/1.00/0.95 at sf0.001/0.01/0.1 via graft.RecallProbe
+    * measured 1.00/1.00/0.95 at sf0.001/0.01/0.1 (commit 19da1fc)
     * on the r14 B=6 size-12-init graph, up from 1.00/0.99/0.93 on the
     * r7 B=8 graph and 0.98/0.98/0.91 on the
     * size-16 graph — uniform-random fixtures, the descent-graph worst
@@ -2227,8 +2227,8 @@ object LlmPipeline {
     // 0.90/0.93/0.73 for a full extra round of wall time; rounds=3 is
     // 0.63–0.66 at EVERY init probed up to B=12/size 16 — too thin).
     // 4 keeps a 23-hit margin and was the r7 round's single biggest
-    // bench cut together with the 2-wide-ops round body (KnnProbe
-    // ladder, docs/TODO_r7.md; r14 B ladder in OPTIMIZATION_r14.md)
+    // bench cut together with the 2-wide-ops round body (r7
+    // ladder, docs/TODO_r7.md §1; r14 B ladder in commit 19da1fc)
     val edges = knnGraphEdges(spark, dir, k = 12, rounds = 4)
     // The exact top-5 twin is the SAME relation the IVF family already
     // materializes: the full-probe (nprobe = nCells) candidate set is

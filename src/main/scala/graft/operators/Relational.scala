@@ -1429,7 +1429,7 @@ object Relational {
     // SHUFFLE_HASH, not the planner's broadcast (r13): the orders FILE
     // is under the auto-broadcast threshold, so the planner broadcast
     // the ×S-EXPLODED dim — a 1.2M-row / ~167 MB broadcast build
-    // (NodeProbe: 2.2 s of serial driver collect+build+ship) that also
+    // (OPTIMIZATION_r13.md §2: 2.2 s of serial driver collect+build+ship) that also
     // voids the very thing this qid demonstrates: salting only exists
     // to spread a SHUFFLE join's hot keys (a broadcast join has no
     // reducer to drown). The hinted form exchanges both sides on

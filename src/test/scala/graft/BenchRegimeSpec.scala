@@ -37,6 +37,11 @@ class BenchRegimeSpec extends AnyFunSuite {
     assert(Bench.parseMemBytes("   ") == g8)
     assert(Bench.parseMemBytes("8 gb") == g8)
     assert(Bench.parseMemBytes("lots") == g8)
+    assert(Bench.parseMemBytes("abc") == g8)
+    // a size ≤ 0 is malformed too: it would render -Xmx0 or a negative
+    // young-gen cap and every forked JVM would fail to start
+    assert(Bench.parseMemBytes("0") == g8)
+    assert(Bench.parseMemBytes("-8g") == g8)
     assert(Bench.targetHeapBytes > 0L)
   }
 

@@ -1,13 +1,10 @@
 package graft
 
-import graft.functions.GraftExtensions
-
 /** SQL-surface registration of the native expressions via the
   * extensions hook / function registry. */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("array_dot_product and array_l2_norm callable from SQL") {
-    GraftExtensions.registerOn(spark)
     val r = spark.sql(
       """SELECT array_dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
         |       array_l2_norm(array(3.0D, 4.0D)) AS n""".stripMargin).head()
@@ -16,19 +13,13 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("extensions class injects into a fresh session") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      // newSession keeps extensions; the builder may return the existing
-      // session, so register-on covers that path too
-      GraftExtensions.registerOn(s2)
-      val d = s2.sql("SELECT array_dot_product(array(2.0D), array(8.0D))").head().getDouble(0)
-      assert(d === 16.0)
-    } finally ()
+    // newSession() builds a fresh session state from the shared
+    // extensions alone, so only the GraftExtensions class can have
+    // registered the function there
+    val s2 = GraftSession.builder().master("local[2]").name("graft-ext-test")
+      .build().newSession()
+    val d = s2.sql("SELECT array_dot_product(array(2.0D), array(8.0D))").head().getDouble(0)
+    assert(d === 16.0)
   }
 }
 
@@ -68,19 +59,16 @@ class FuseDotSpec extends SparkSpec {
   }
 
   test("injected at runtime, fusion preserves results end to end") {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.FuseArrayDotProduct
-    try {
-      // range-derived arrays: literal rows would collapse to a
-      // LocalTableScan at plan time and hide the fused expression
-      val df = spark.range(2)
-        .selectExpr("transform(sequence(0, 2), i -> cast(i + id AS double)) AS a",
-          "transform(sequence(0, 2), i -> 2.0D) AS b")
-        .selectExpr(s"$hof AS dot")
-      assert(df.queryExecution.executedPlan.toString.contains("array_dot_product"),
-        df.queryExecution.executedPlan.toString)
-      assert(df.orderBy("dot").collect().map(_.getDouble(0)).toSeq === Seq(6.0, 12.0))
-    } finally spark.experimental.extraOptimizations = prev
+    // the session's GraftExtensions inject the rule; no manual setup
+    // range-derived arrays: literal rows would collapse to a
+    // LocalTableScan at plan time and hide the fused expression
+    val df = spark.range(2)
+      .selectExpr("transform(sequence(0, 2), i -> cast(i + id AS double)) AS a",
+        "transform(sequence(0, 2), i -> 2.0D) AS b")
+      .selectExpr(s"$hof AS dot")
+    assert(df.queryExecution.executedPlan.toString.contains("array_dot_product"),
+      df.queryExecution.executedPlan.toString)
+    assert(df.orderBy("dot").collect().map(_.getDouble(0)).toSeq === Seq(6.0, 12.0))
   }
 }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class LlmPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  // Beam parameters chosen by measurement (graft.RecallProbe, round 5):
+  // Beam parameters chosen by measurement (round 5, docs/TODO_r5.md §What round 5 did):
   // k=12/rounds=4/beam=48/hops=8 recovers 0.98 / 0.98 / 0.91 of the
   // exact top-5 at sf0.001 / 0.01 / 0.1 — ≥ 0.85 with margin at every
   // fixture. The r4 contract (k=8/rounds=3/beam=24/hops=6, floor 0.6)
@@ -42,7 +42,7 @@ class LlmPipelineSpec extends SparkSpec {
       Seq("qid", "cid"), "leftsemi").count()
     assert(hits >= (nQ * 5 * 85) / 100,
       s"beam-search recall too low: $hits/${nQ * 5} (floor 0.85; " +
-        "measured 0.98/0.98/0.91 at sf0.001/0.01/0.1 — see RecallProbe)")
+        "measured 0.98/0.98/0.91 at sf0.001/0.01/0.1 — see docs/TODO_r5.md)")
   }
 
   private def docs(rows: (Long, String)*) =

@@ -3,20 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (same config the driver's
-  * Verify/Bench mains use: UTC, ns-timestamps as long, small shuffle
-  * parallelism).
+/** Shared local SparkSession for all suites, built by the same factory
+  * as the driver's Verify/Bench mains (UTC, ns-timestamps as long, graft
+  * extensions, per-process warehouse), at small shuffle parallelism.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder().master("local[4]").name("graft-test")
+      .shuffle(4).build()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -14,6 +14,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 
-java $ADD_OPENS -Xmx4g \
+java $ADD_OPENS -Xmx4g -Dspark.ui.enabled=false \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.ExplainAudit "$@"
